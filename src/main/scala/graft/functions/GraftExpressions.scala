@@ -117,8 +117,6 @@ object GraftExpressions {
     * Null vector coalesces to 0L, matching the UDF's explicit null branch
     * (zero sign bits). */
   def hyperplaneSignature(vec: Column, numPlanes: Int, planeOffset: Int): Column = {
-    require(numPlanes >= 1 && numPlanes <= 64,
-      s"hyperplane numPlanes must be in 1..64, got $numPlanes")
     import org.apache.spark.sql.functions.{coalesce, lit}
     coalesce(
       GraftSqlBridge.column(HyperplaneSig(
@@ -363,6 +361,9 @@ case class DotProduct(left: Expression, right: Expression)
   * call site. */
 case class HyperplaneSig(child: Expression, numPlanes: Int, planeOffset: Int)
     extends UnaryExpression with ExpectsInputTypes {
+  // the sign bits pack into one long (`1L << p` wraps past 63)
+  require(numPlanes >= 1 && numPlanes <= 64,
+    s"hyperplane numPlanes must be in 1..64, got $numPlanes")
   override def inputTypes = Seq(ArrayType(DoubleType))
   override def dataType: DataType = LongType
   override def prettyName: String = "graft_hyperplane_sig"

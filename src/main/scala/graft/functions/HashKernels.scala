@@ -443,7 +443,7 @@ object HashKernels {
 
   /** Random-hyperplane LSH signature of a double vector: `numPlanes` sign
     * bits packed into a long, plane `p`'s component at dim `j` being
-    * `mix(mix(planeOffset+p) ^ (j * 0xC2B2AE3D27D4EB4D)) / 2^63` — the
+    * `mix(mix(planeOffset+p) ^ (j * 0xC2B2AE3D27D4EB4F)) / 2^63` — the
     * exact double chain of [[graft.pipeline.Ann.planeComponent]] and the
     * scalar UDF this replaces (projection is the same ascending-dim left
     * fold, divide-then-multiply-then-add, so every acc double is
@@ -478,15 +478,21 @@ object HashKernels {
     * interpreted `aggregate(sort_array(b), struct(prev,run,best), ...)`
     * fold on the per-document repetition-signal path — integer-valued, so
     * equivalence is exact, not FP-sensitive. Empty array → 0 (the HOF
-    * form's initial `best`). */
+    * form's initial `best`). Null elements are skipped: in the HOF fold a
+    * null never equals its predecessor, so each is a run of 1 and can only
+    * matter when no non-null element exists (result 1). */
   def maxSortedRun(arr: ArrayData): Int = {
-    val n = arr.numElements()
-    if (n == 0) return 0
-    val a = new Array[UTF8String](n)
+    val total = arr.numElements()
+    if (total == 0) return 0
+    val a = new Array[UTF8String](total)
+    var n = 0
     var i = 0
-    while (i < n) { a(i) = arr.getUTF8String(i); i += 1 }
+    while (i < total) {
+      if (!arr.isNullAt(i)) { a(n) = arr.getUTF8String(i); n += 1 }
+      i += 1
+    }
     // natural-order sort: UTF8String is Comparable (binary byte order)
-    java.util.Arrays.sort(a.asInstanceOf[Array[Object]])
+    java.util.Arrays.sort(a.asInstanceOf[Array[Object]], 0, n)
     var best = 1
     var run = 1
     i = 1

@@ -175,7 +175,6 @@ object PageRank {
       checkpointEvery: Int): Result = {
 
     val ckpt = Option(checkpointTable).filter(_.nonEmpty)
-    val debug = sys.env.get("SPARK_GRAFT_PR_DEBUG").contains("1")
     val e = g.edges
     val vertDeg = g.vertDeg
     val n = g.n
@@ -246,9 +245,16 @@ object PageRank {
     while (step < maxIters && delta >= tol) {
       val t0 = System.nanoTime()
       val block = math.min(math.max(1, stepsPerJob), maxIters - step)
+      // with danglers a superstep reads its `summed` twice (rank join +
+      // dangling total), so chaining steps would double the fused plan per
+      // step; there each chained step's state is lineage-cut lazily, which
+      // keeps the planned block one superstep deep and the block-boundary
+      // commits and convergence test unchanged
       var cur = st
-      var i = 0
-      while (i < block) { cur = superstep(cur); i += 1 }
+      for (i <- 0 until block) {
+        cur = superstep(cur)
+        if (hasDanglers && i < block - 1) cur = cur.localCheckpoint(false)
+      }
       val newSt = cur.localCheckpoint(true)
 
       // convergence check costs one extra join+agg per BLOCK; skip it
@@ -263,8 +269,6 @@ object PageRank {
 
       val secs = (System.nanoTime() - t0) / 1e9
       val endStep = step + block - 1
-      if (debug)
-        println(f"""{"pr_block":{"start":$step,"end":$endStep,"secs":$secs%.3f}}""")
       ckpt.foreach { t =>
         if (endStep - lastCommitted >= math.max(1, checkpointEvery)) {
           // metrics-only dangling mass: a cheap scan of the freshly

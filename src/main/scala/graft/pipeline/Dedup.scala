@@ -244,23 +244,25 @@ object Dedup {
     // scans instead of 1. Unpersisted before return: downstream consumers
     // only read the localCheckpoint'd labels.
     val p = pairs.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val edges = p.select(col("id1").as("src"), col("id2").as("dst"))
-    val comp = graft.graph.ConnectedComponents.hashMin(spark, edges, maxIters)
-      .withColumnRenamed("vid", "id")
-    if (verifyClosure) {
-      // fail-loud closure check (see scaladoc): a pair whose endpoints
-      // landed in different clusters is exactly a maxIters truncation; two
-      // id-keyed joins over the (small, persisted) pair table catch it.
-      val crossing = p
-        .join(comp.select(col("id").as("id1"), col("component").as("c1")), Seq("id1"))
-        .join(comp.select(col("id").as("id2"), col("component").as("c2")), Seq("id2"))
-        .where(col("c1") =!= col("c2")).count()
-      require(crossing == 0L,
-        s"dupClusters: $crossing candidate pairs cross cluster boundaries — " +
-          s"min-label propagation hit maxIters=$maxIters before convergence " +
-          "(cluster diameter exceeds it); raise maxIters")
-    }
-    p.unpersist()
+    val comp = try {
+      val edges = p.select(col("id1").as("src"), col("id2").as("dst"))
+      val labels = graft.graph.ConnectedComponents.hashMin(spark, edges, maxIters)
+        .withColumnRenamed("vid", "id")
+      if (verifyClosure) {
+        // fail-loud closure check (see scaladoc): a pair whose endpoints
+        // landed in different clusters is exactly a maxIters truncation; two
+        // id-keyed joins over the (small, persisted) pair table catch it.
+        val crossing = p
+          .join(labels.select(col("id").as("id1"), col("component").as("c1")), Seq("id1"))
+          .join(labels.select(col("id").as("id2"), col("component").as("c2")), Seq("id2"))
+          .where(col("c1") =!= col("c2")).count()
+        require(crossing == 0L,
+          s"dupClusters: $crossing candidate pairs cross cluster boundaries — " +
+            s"min-label propagation hit maxIters=$maxIters before convergence " +
+            "(cluster diameter exceeds it); raise maxIters")
+      }
+      labels
+    } finally p.unpersist()
     val docIds = docs.select(col(idCol).as("id"))
     // survivor = min id among the cluster's members PRESENT IN docs: the
     // label itself for well-formed inputs (hashMin labels with the min

@@ -18,4 +18,7 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   def tmpDir(prefix: String): String =
     java.nio.file.Files.createTempDirectory(prefix).toString
+
+  /** Frames currently registered with the session's cache manager. */
+  def cachedFrames: Int = org.apache.spark.sql.CacheProbe.entries(spark)
 }

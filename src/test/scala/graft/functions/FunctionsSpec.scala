@@ -304,6 +304,12 @@ class FunctionsSpec extends SparkSpec {
     assert(plan.contains("graft_hyperplane_sig") && !plan.contains("ScalaUDF"), plan)
   }
 
+  test("HyperplaneSig refuses more planes than a long has sign bits") {
+    intercept[IllegalArgumentException] {
+      HyperplaneSig(org.apache.spark.sql.catalyst.expressions.Literal(null), 65, 0)
+    }
+  }
+
   test("MaxSortedRun expression equals the aggregate(sort_array) reference fold") {
     val s = spark
     import s.implicits._
@@ -312,7 +318,8 @@ class FunctionsSpec extends SparkSpec {
     // single, all-equal, and adversarial unicode grams
     val arrays: Seq[Seq[String]] = (0 until 150).map { _ =>
       Seq.fill(rnd.nextInt(60))(s"tok${rnd.nextInt(6)} g${rnd.nextInt(4)}")
-    } ++ Seq(Seq.empty[String], Seq("only"), Seq.fill(17)("same gram")) ++
+    } ++ Seq(Seq.empty[String], Seq("only"), Seq.fill(17)("same gram"),
+      Seq("a", null, "a", null, null, "b"), Seq(null, null)) ++
       adversarial.grouped(7).map(_.toSeq).toSeq
     val df = (arrays :+ null.asInstanceOf[Seq[String]]).toDF("b")
     val both = df.select(

@@ -374,4 +374,52 @@ class GraphKernelsSpec extends SparkSpec {
       assert(committed(v) == x, s"committed rank differs at vid=$v")
     }
   }
+
+  test("hashMin/LP release their layout caches on return and on a failed commit") {
+    val edges = Referee.zipf(150, 600, 3L)
+    val before = cachedFrames
+    ConnectedComponents.hashMin(spark, edgeDF(edges), stepsPerJob = 2).count()
+    assert(cachedFrames == before, s"hashMin left ${cachedFrames - before} cached frames")
+    LabelPropagation.run(spark, edgeDF(edges), numIters = 3).count()
+    assert(cachedFrames == before, s"LP left ${cachedFrames - before} cached frames")
+    // a regular file is not a table directory: the first TableIO.commit throws
+    val notATable = java.io.File.createTempFile("not_a_table", ".txt")
+    notATable.deleteOnExit()
+    intercept[Exception] {
+      ConnectedComponents.hashMin(spark, edgeDF(edges), checkpointTable = notATable.getPath)
+    }
+    assert(cachedFrames == before,
+      s"failed hashMin left ${cachedFrames - before} cached frames")
+    intercept[Exception] {
+      LabelPropagation.run(spark, edgeDF(edges), numIters = 3,
+        checkpointTable = notATable.getPath)
+    }
+    assert(cachedFrames == before,
+      s"failed LP left ${cachedFrames - before} cached frames")
+  }
+
+  test("fused PageRank on a graph with danglers plans one superstep, not 2^k") {
+    val edges = Referee.zipf(400, 1600, 11L)
+    assert(PageRank.prepare(spark, edgeDF(edges)).hasDanglers)
+    // largest optimized plan among the run's localCheckpoint queries
+    def maxCheckpointPlan(stepsPerJob: Int): Int = {
+      val sizes = scala.collection.mutable.ArrayBuffer.empty[Int]
+      val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+        override def onSuccess(funcName: String,
+            qe: org.apache.spark.sql.execution.QueryExecution, durationNs: Long): Unit =
+          if (funcName == "localCheckpoint")
+            sizes.synchronized { sizes += qe.optimizedPlan.collect { case n => n }.size }
+        override def onFailure(funcName: String,
+            qe: org.apache.spark.sql.execution.QueryExecution, exception: Exception): Unit = ()
+      }
+      spark.listenerManager.register(listener)
+      try PageRank.run(spark, edgeDF(edges), maxIters = 5, tol = -1.0,
+        stepsPerJob = stepsPerJob).ranks.count()
+      finally spark.listenerManager.unregister(listener)
+      sizes.synchronized(sizes.max)
+    }
+    val one = maxCheckpointPlan(1)
+    val five = maxCheckpointPlan(5)
+    assert(five <= 6 * one, s"stepsPerJob=5 plans $five nodes vs $one at stepsPerJob=1")
+  }
 }

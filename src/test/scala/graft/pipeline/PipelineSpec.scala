@@ -117,6 +117,18 @@ class DedupSpec extends SparkSpec {
     assert(ok.forall(_._2 == 1L) && ok.count(_._3 == 1L) == 1)
   }
 
+  test("dupClusters releases the persisted pair table when the closure check throws") {
+    val ids = (1L to 6L).toDF("doc_id")
+    val chain = (1L to 5L).map(i => (i, i + 1)).toDF("id1", "id2")
+    val before = cachedFrames
+    intercept[IllegalArgumentException] {
+      Dedup.dupClusters(spark, ids, "doc_id", chain, maxIters = 1)
+    }
+    assert(chain.storageLevel == org.apache.spark.storage.StorageLevel.NONE,
+      "pair table still cached after the failed closure check")
+    assert(cachedFrames == before, s"cached frames: $before -> $cachedFrames")
+  }
+
   test("simhash planted hamming-8 pair: derived 9-block pigeonhole finds it, 4 blocks miss") {
     // 8 differing bits placed so EVERY 16-bit quarter differs (a 4-block
     // scheme guarantees recall only to hamming 3 and misses this pair)
